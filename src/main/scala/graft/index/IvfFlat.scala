@@ -28,10 +28,12 @@ import org.apache.spark.sql.graft.{DistanceMetric, NearestCentroid}
   * run to run); the distributed path merges per-partition sums in
   * partition order, so it is deterministic for a fixed partitioning of
   * the training data. At 100TB you'd k-means a sample and keep the
-  * assign pass full-scan; `sampleFraction` exposes that.
+  * assign pass full-scan; `sampleFraction` exposes that. The build
+  * buckets its rows with `assignCentroids` ([[IvfFlat.build]]).
   */
 final case class IvfFlatModel(
     centroids: Array[Array[Double]],
+    assignCentroids: Array[Array[Double]],
     metric: DistanceMetric.Value,
     probeLists: Int,
     vecCol: String,
@@ -66,6 +68,18 @@ final case class IvfFlatModel(
     copy(buckets = buckets.unionAll(assigned))
   }
 
+  /** The layout over `rows` (columns `idCol`, `vecCol`) as a projection:
+    * the same buckets as `build(ids <= watermark).insert(the rest)`. */
+  def over(rows: DataFrame, idCol: String, watermark: Long): IvfFlatModel = {
+    val v = col(vecCol)
+    val bucket = when(col(idCol) <= watermark,
+        NearestCentroid.column(v, assignCentroids, metric))
+      .otherwise(NearestCentroid.column(v, centroids, metric))
+    copy(buckets = rows.filter(v.isNotNull) // null vectors are unindexable
+      .select(bucket.as("__bucket"), col(idCol),
+        v.cast("array<double>").as(vecCol)))
+  }
+
   /** Delete maintenance — the OTHER half of index lifecycle (the
     * reference leaves even insert maintenance as a TODO,
     * src/execution/insert_executor.cpp:45): drop matching rows from
@@ -78,17 +92,17 @@ final case class IvfFlatModel(
     copy(buckets = buckets.filter(!pred))
 
   /** Persist bucketed layout: partitioned by bucket id so scan-time
-    * probe filters become partition pruning at any scale. Centroids +
-    * model params ride along in `/meta`, so [[IvfFlat.load]] is
+    * probe filters become partition pruning at any scale. Both centroid
+    * sets + model params ride along in `/meta`, so [[IvfFlat.load]] is
     * self-contained (no caller-side centroid bookkeeping). */
   def save(path: String): Unit = {
     val spark = buckets.sparkSession
     import spark.implicits._
     buckets.write.mode("overwrite").partitionBy("__bucket")
       .parquet(path + "/buckets")
-    centroids.toSeq.zipWithIndex
-      .map { case (c, b) => (b, c.toSeq, metric.id, probeLists, vecCol) }
-      .toDF("b", "cv", "metric", "probe_lists", "vec_col")
+    centroids.toSeq.zip(assignCentroids).zipWithIndex.map { case ((c, a), b) =>
+        (b, c.toSeq, metric.id, probeLists, vecCol, a.toSeq) }
+      .toDF("b", "cv", "metric", "probe_lists", "vec_col", "acv")
       .repartition(1).write.mode("overwrite").parquet(path + "/meta")
   }
 
@@ -387,7 +401,7 @@ object IvfFlat {
       NearestCentroid.column(col(vecCol), assignCs, metric))
       .select((Seq("__bucket") ++ idCols ++ Seq(vecCol)).map(col): _*)
     trainData.unpersist()
-    IvfFlatModel(centroids, metric, probeLists, vecCol, buckets)
+    IvfFlatModel(centroids, assignCs, metric, probeLists, vecCol, buckets)
   }
 
   /** Reopen a persisted index — fully self-contained from `/meta`.
@@ -399,6 +413,7 @@ object IvfFlat {
     val meta = spark.read.parquet(path + "/meta").collect()
       .sortBy(_.getInt(0))
     val centroids = meta.map(_.getSeq[Double](1).toArray)
+    val assignCs = meta.map(_.getSeq[Double](5).toArray)
     val base = spark.read.parquet(path + "/buckets")
     val streamPath = new org.apache.hadoop.fs.Path(path + "/stream")
     val fs = streamPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -419,7 +434,7 @@ object IvfFlat {
         st.map(t => base.unionByName(t.select(base.columns.map(col): _*)))
           .getOrElse(base)
       } else base
-    IvfFlatModel(centroids, DistanceMetric(meta(0).getInt(2)),
+    IvfFlatModel(centroids, assignCs, DistanceMetric(meta(0).getInt(2)),
       meta(0).getInt(3), meta(0).getString(4), buckets)
   }
 }

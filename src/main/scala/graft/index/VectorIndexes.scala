@@ -3,9 +3,10 @@ package graft.index
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, max}
 import org.apache.spark.sql.graft.DistanceMetric
 
-/** Vector-index catalog + KNN front door.
+/** Vector-index catalog + index selection.
   *
   * Mirrors the reference's `Catalog::CreateVectorIndex` metadata
   * (`src/include/catalog/catalog.h:293-350`: index name, table, column,
@@ -27,16 +28,22 @@ object VectorIndexes {
       * isn't available in the target plan). */
     def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
         : DataFrame
+    /** This index over `table`'s current rows, appended ones included
+      * (InsertVectorEntry, vector_index.h:21). */
+    def follow(table: DataFrame, column: String): Model
   }
-  final case class IvfModel(m: IvfFlatModel, idCol: String) extends Model {
+  /** `watermark`: the highest id the build saw. */
+  final case class IvfModel(m: IvfFlatModel, idCol: String, watermark: Long)
+      extends Model {
     def scan(spark: SparkSession, query: Seq[Double], k: Int): DataFrame =
       m.scan(query, k, tieBreak = Some(idCol))
     def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
-        : DataFrame = {
-      import org.apache.spark.sql.functions.col
+        : DataFrame =
       scan(spark, query, k).select(col(idCol).as("__knn_id"),
         col(m.vecCol).cast("array<double>").as("__knn_vec"))
-    }
+    def follow(table: DataFrame, column: String): Model =
+      copy(m = m.over(table.select(col(idCol), col(column).as(m.vecCol)),
+        idCol, watermark))
   }
   final case class HnswModel(idx: HnswIndex, idCol: String) extends Model {
     def scan(spark: SparkSession, query: Seq[Double], k: Int): DataFrame =
@@ -47,6 +54,17 @@ object VectorIndexes {
       import spark.implicits._
       idx.scanFull(query.toArray, k).map(t => (t._1, t._2.toSeq))
         .toDF("__knn_id", "__knn_vec")
+    }
+    /** Inserts the ids past `idx.maxId` (not idx.size: skipped null
+      * vectors make size lag behind ids) in place. The collect is bounded
+      * by the rows appended since the last call, the reference's DML
+      * scale; a bulk load must build via Hnsw.buildAuto instead. */
+    def follow(table: DataFrame, column: String): Model = {
+      table.filter(col(idCol) > idx.maxId && col(column).isNotNull)
+        .select(col(idCol), col(column).cast("array<double>"))
+        .collect().foreach(r =>
+          idx.insert(r.getLong(0), r.getSeq[Double](1).toArray))
+      this
     }
   }
 
@@ -77,8 +95,10 @@ object VectorIndexes {
       idCol: String, vecCol: String, lists: Int, probeLists: Int,
       metric: DistanceMetric.Value = DistanceMetric.L2): IvfFlatModel = {
     val m = IvfFlat.build(df, Seq(idCol), vecCol, lists, probeLists, metric)
+    val watermark = df.agg(coalesce(max(col(idCol)).cast("long"), lit(-1L)))
+      .head().getLong(0)
     register(IndexMeta(name, table, vecCol, "ivfflat", metric,
-      IvfModel(m, idCol), idCol, leafOf(df)))
+      IvfModel(m, idCol, watermark), idCol, leafOf(df)))
     m
   }
 
@@ -105,9 +125,9 @@ object VectorIndexes {
   def saveRegistry(spark: SparkSession, root: String): Unit = {
     import spark.implicits._
     val metas = list().sortBy(_.name)
-    metas.foreach { m =>
+    val watermarks = metas.map { m =>
       m.model match {
-        case IvfModel(mm, _) => mm.save(s"$root/${m.name}/ivf")
+        case IvfModel(mm, _, w) => mm.save(s"$root/${m.name}/ivf"); w
         case HnswModel(idx, _) =>
           // Hadoop FS, not java.io: the registry root may be hdfs://
           // or s3a:// — the parquet pieces already go through the
@@ -116,11 +136,13 @@ object VectorIndexes {
           val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           val oos = new java.io.ObjectOutputStream(fs.create(p, true))
           try oos.writeObject(idx) finally oos.close()
+          idx.maxId
       }
     }
-    metas.map(m => (m.name, m.table, m.column, m.method, m.metric.id,
-        m.idCol))
-      .toDF("name", "table", "column", "method", "metric", "id_col")
+    metas.zip(watermarks).map { case (m, w) => (m.name, m.table, m.column,
+        m.method, m.metric.id, m.idCol, w) }
+      .toDF("name", "table", "column", "method", "metric", "id_col",
+        "watermark")
       .repartition(1).write.mode("overwrite").parquet(s"$root/_registry")
   }
 
@@ -128,7 +150,8 @@ object VectorIndexes {
     * reloaded model (IVFFlat probes serve from the partition-pruned
     * saved layout) and `leaf = None` — callers that route the
     * optimizer rule re-derive leaves against their current table
-    * plans (Engine.loadIndexRegistry does). */
+    * plans and make the models follow them (Engine.loadIndexRegistry
+    * does). */
   def loadRegistry(spark: SparkSession, root: String): Seq[IndexMeta] =
     spark.read.parquet(s"$root/_registry").collect().toSeq.map { r =>
       val name = r.getAs[String]("name")
@@ -136,7 +159,8 @@ object VectorIndexes {
       val idCol = r.getAs[String]("id_col")
       val model = method match {
         case "ivfflat" =>
-          IvfModel(IvfFlat.load(spark, s"$root/$name/ivf"), idCol)
+          IvfModel(IvfFlat.load(spark, s"$root/$name/ivf"), idCol,
+            r.getAs[Long]("watermark"))
         case "hnsw" =>
           val p = new org.apache.hadoop.fs.Path(s"$root/$name/hnsw.bin")
           val fs =
@@ -191,28 +215,5 @@ object VectorIndexes {
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_.isInstanceOf[org.apache.spark.sql.graft.VectorIndexScanRule]))
       spark.experimental.extraOptimizations = cur :+ rule
-  }
-
-  /** KNN over `df` (registered as `table`): index-served when selection
-    * finds one, else brute-force TopN. Output schema is UNIFORM across
-    * paths — all of df's columns plus `dist`, distance-ascending —
-    * so callers don't change shape when the session's
-    * vector_index_method (or index registry) changes. */
-  def knn(spark: SparkSession, table: String, df: DataFrame,
-      idCol: String, vecCol: String, query: Seq[Double], k: Int,
-      metric: DistanceMetric.Value = DistanceMetric.L2): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val method =
-      spark.conf.getOption("graft.vector_index_method").getOrElse("")
-    select(table, vecCol, metric, method) match {
-      case Some(meta) =>
-        val ids = meta.model.scan(spark, query, k)
-          .select(col(meta.idCol).as("__knn_join_id"), col("dist"))
-        df.join(ids, col(idCol) === col("__knn_join_id"))
-          .drop("__knn_join_id")
-          .orderBy(col("dist").asc, col(idCol).asc)
-      case None =>
-        Knn.bruteForce(df, vecCol, query, k, metric, Some(idCol))
-    }
   }
 }

@@ -149,10 +149,10 @@ class VectorIndexScanRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // Inject the OPTIMIZED subplan, not the analyzed one: this rule
       // runs after the optimizer's early batches, so an analyzed
       // fragment would smuggle in operators the physical planner
-      // refuses (e.g. a Deduplicate from the index-maintenance
-      // `.distinct()` that only ReplaceDeduplicateWithAggregate — a
-      // finish-analysis rule — can remove) and alias nodes. A nested
-      // optimization pass is safe here: optimizer rules are idempotent,
+      // refuses (e.g. a Deduplicate that only
+      // ReplaceDeduplicateWithAggregate — a finish-analysis rule — can
+      // remove) and alias nodes. A nested optimization pass is safe
+      // here: optimizer rules are idempotent,
       // output attribute ids are preserved (the Sort/Limit retained
       // above still resolve), and re-entry of THIS rule terminates —
       // the injected fragment has no Limit+Sort(vector distance) on

@@ -466,6 +466,63 @@ class EngineSpec extends SparkSpecBase {
       // the restored model itself serves (probe-all ivf is exact)
       val direct = meta.get.model.scan(spark, Seq(1.0, 0.0, 0.0), 2)
       assert(direct.count() == 2)
-    } finally graft.index.VectorIndexes.drop("prti")
+      // and keeps following the table: a later insert is served
+      e2.executeSql("INSERT INTO prt VALUES (ARRAY [5.0, 5.0, 5.0], 5)")
+      e2.executeSql("set vector_index_method=ivfflat")
+      val newSql =
+        "SELECT tag FROM prt ORDER BY v <-> ARRAY [5.0, 5.0, 5.0] LIMIT 1"
+      assert(e2.executeSql(s"EXPLAIN (o) $newSql").collect()
+        .map(_.getString(0)).mkString("\n").contains("__graft_knn_id"))
+      assert(e2.executeSql(newSql).collect().map(_.getInt(0)).toSeq == Seq(5))
+    } finally {
+      spark.conf.set("graft.vector_index_method", "")
+      graft.index.VectorIndexes.drop("prti")
+    }
+  }
+
+  test("ivfflat-served KNN keeps a flat plan and exact ids across inserts") {
+    // the index follows the live table, so an INSERT adds no plan nodes
+    // to the statements it serves (probe_lists = lists: exact)
+    val e = mkEngine
+    val rnd = new scala.util.Random(7)
+    def vec(): Seq[Double] = Seq.fill(4)(rnd.nextInt(10000) / 100.0)
+    def arr(v: Seq[Double]) = v.mkString("ARRAY [", ", ", "]")
+    var tag = 0
+    def insert(n: Int): Seq[Seq[Double]] = {
+      val vs = Seq.fill(n)(vec())
+      e.executeSql("INSERT INTO fl VALUES " + vs.map { v =>
+        tag += 1; s"(${arr(v)}, $tag)" }.mkString(", "))
+      vs
+    }
+    def knn(method: String, q: Seq[Double]) = {
+      e.executeSql(s"set vector_index_method=$method")
+      e.executeSql(s"SELECT tag FROM fl ORDER BY v <-> ${arr(q)} LIMIT 5")
+    }
+    def servedNodes(q: Seq[Double]): Int = {
+      val plan = knn("ivfflat", q).queryExecution.optimizedPlan
+      assert(plan.toString.contains("__graft_knn_id"), "not index-served")
+      plan.collect { case n => n }.size
+    }
+    def assertExact(q: Seq[Double]): Unit = {
+      val ids = knn("ivfflat", q).collect().map(_.getInt(0)).toSeq
+      assert(ids == knn("none", q).collect().map(_.getInt(0)).toSeq)
+    }
+    e.executeSql("CREATE TABLE fl(v VECTOR(4), tag integer)")
+    val q0 = insert(40).head
+    e.executeSql("CREATE INDEX fli ON fl USING ivfflat (v vector_l2_ops) " +
+      "WITH (lists = 4, probe_lists = 4)")
+    try {
+      val nodes0 = servedNodes(q0)
+      assertExact(q0)
+      (1 to 3).foreach { round =>
+        val fresh = insert(10)
+        assert(servedNodes(q0) == nodes0, s"plan grew at round $round")
+        assertExact(q0)
+        assertExact(fresh.last)
+      }
+    } finally {
+      spark.conf.set("graft.vector_index_method", "")
+      graft.index.VectorIndexes.drop("fli")
+    }
   }
 }

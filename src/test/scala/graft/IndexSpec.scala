@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DistanceMetric
 
-import graft.index.{Hnsw, IvfFlat, Knn, VectorIndexes}
+import graft.index.{Hnsw, IvfFlat, IvfFlatModel, Knn, VectorIndexes}
 
 /** Vector-index correctness: exactness when probing everything, recall
   * bounds for approximate configs, insert maintenance, k-means
@@ -61,12 +61,24 @@ class IndexSpec extends SparkSpecBase {
   }
 
   test("ivfflat insert-after-build is visible and exact (vector.04/05)") {
-    val m = IvfFlat.build(emb.filter(col("vec_id") < 400), Seq("vec_id"),
-      "v", lists = 8, probeLists = 8)
-    val m2 = m.insert(emb.filter(col("vec_id") >= 400))
-    val got = m2.scan(query, 15, Some("vec_id"))
-      .select("vec_id").collect().map(_.getLong(0)).toSeq
-    assert(got == bruteIds(15))
+    def bucketOf(x: IvfFlatModel): Map[Long, Int] =
+      x.buckets.select("vec_id", "__bucket").collect()
+        .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // iterations = 1 keeps the build's assignment centroids (the seeds)
+    // apart from the final ones, so the two-centroid rule is exercised
+    Seq(50, 1).foreach { iters =>
+      val m = IvfFlat.build(emb.filter(col("vec_id") < 400), Seq("vec_id"),
+        "v", lists = 8, probeLists = 8, iterations = iters)
+      val m2 = m.insert(emb.filter(col("vec_id") >= 400))
+      val got = m2.scan(query, 15, Some("vec_id"))
+        .select("vec_id").collect().map(_.getLong(0)).toSeq
+      assert(got == bruteIds(15))
+      // the layout re-derived over all rows buckets every id like
+      // build-then-insert does
+      assert(bucketOf(m.over(emb, "vec_id", 399L)) == bucketOf(m2))
+      if (iters == 1) // ... and the rule is not vacuous here
+        assert(bucketOf(m.over(emb, "vec_id", -1L)) != bucketOf(m2))
+    }
   }
 
   test("partitioned hnsw: all rows indexed, recall >= monolithic's floor") {
