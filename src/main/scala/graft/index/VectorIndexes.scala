@@ -23,9 +23,8 @@ object VectorIndexes {
 
   sealed trait Model {
     def scan(spark: SparkSession, query: Seq[Double], k: Int): DataFrame
-    /** (__knn_id, __knn_vec) — id + stored vector of the top-k, for the
-      * optimizer rule's semi-join (vector-valued when the id column
-      * isn't available in the target plan). */
+    /** (__knn_id, __knn_vec) — id + stored vector of the top-k; the
+      * optimizer rule semi-joins on `__knn_id` only. */
     def scanIdsVecs(spark: SparkSession, query: Seq[Double], k: Int)
         : DataFrame
     /** This index over `table`'s current rows, appended ones included
@@ -71,7 +70,7 @@ object VectorIndexes {
   final case class IndexMeta(
       name: String, table: String, column: String, method: String,
       metric: DistanceMetric.Value, model: Model,
-      idCol: String = "",
+      idCol: String,
       /** Canonicalized leaf of the indexed table's plan — how the
         * optimizer rule recognizes the table inside arbitrary queries
         * (the reference matches SeqScan table OIDs instead,
@@ -207,9 +206,8 @@ object VectorIndexes {
     }
   }
 
-  /** Attach the KNN rewrite rule to an existing session (for
-    * config-time wiring use spark.sql.extensions=
-    * org.apache.spark.sql.graft.GraftExtensions). Idempotent. */
+  /** Attach the KNN rewrite rule to a session — the one way to enable
+    * it. Idempotent. */
   def enableRewrite(spark: SparkSession): Unit = {
     val rule = new org.apache.spark.sql.graft.VectorIndexScanRule(spark)
     val cur = spark.experimental.extraOptimizations

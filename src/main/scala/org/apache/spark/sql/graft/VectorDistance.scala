@@ -161,16 +161,4 @@ object VectorDistanceApi {
         exprs.map(Cast(_, org.apache.spark.sql.types.DoubleType))),
       "built-in")
   }
-
-  // Descriptors for SparkSessionExtensions.injectFunction.
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  private def descriptor(name: String, m: DistanceMetric.Value) =
-    (FunctionIdentifier(name),
-      new ExpressionInfo(classOf[VectorDistance].getName, name),
-      (exprs: Seq[Expression]) => VectorDistance(exprs(0), exprs(1), m)
-        : Expression)
-  def l2FuncDescriptor = descriptor("l2_dist", DistanceMetric.L2)
-  def ipFuncDescriptor = descriptor("inner_product", DistanceMetric.InnerProduct)
-  def cosFuncDescriptor = descriptor("cosine_similarity", DistanceMetric.Cosine)
 }

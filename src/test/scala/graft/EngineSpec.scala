@@ -525,4 +525,50 @@ class EngineSpec extends SparkSpecBase {
       graft.index.VectorIndexes.drop("fli")
     }
   }
+
+  test("index-served KNN semi-joins on __rid, with a scalar id side") {
+    // Both indexes exact (probe_lists = lists, ef_search >= rows): the
+    // rewrite keys on the row id, never on the vector value, and the
+    // IVFFlat probe keeps its top-k plan (no range-partitioned sort).
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.types.ArrayType
+    val e = mkEngine
+    val rnd = new scala.util.Random(11)
+    def arr(v: Seq[Double]) = v.mkString("ARRAY [", ", ", "]")
+    val vs = Seq.fill(30)(Seq.fill(4)(rnd.nextInt(10000) / 100.0))
+    e.executeSql("CREATE TABLE sj(v VECTOR(4), tag integer)")
+    e.executeSql("INSERT INTO sj VALUES " + vs.zipWithIndex
+      .map { case (v, i) => s"(${arr(v)}, $i)" }.mkString(", "))
+    e.executeSql("CREATE INDEX sji ON sj USING ivfflat (v vector_l2_ops) " +
+      "WITH (lists = 3, probe_lists = 3)")
+    e.executeSql("CREATE INDEX sjh ON sj USING hnsw (v vector_l2_ops) " +
+      "WITH (m = 4, ef_construction = 16, ef_search = 64)")
+    def knn(method: String) = {
+      e.executeSql(s"set vector_index_method=$method")
+      e.executeSql(s"SELECT tag FROM sj ORDER BY v <-> ${arr(vs(5))} LIMIT 4")
+    }
+    try {
+      val expected = knn("none").collect().map(_.getInt(0)).toSeq
+      Seq("ivfflat", "hnsw").foreach { method =>
+        val df = knn(method)
+        val semis = df.queryExecution.optimizedPlan.collect {
+          case j: Join if j.joinType == LeftSemi => j }
+        assert(semis.size == 1, s"$method: not index-served")
+        assert(semis.head.condition.exists(
+          _.references.exists(_.name == "__rid")), s"$method: not on __rid")
+        val right = semis.head.right.output
+        assert(right.map(_.name) == Seq("__graft_knn_id") &&
+          !right.head.dataType.isInstanceOf[ArrayType], s"$method: $right")
+        assert(df.collect().map(_.getInt(0)).toSeq == expected, method)
+        val phys = df.queryExecution.executedPlan.toString
+        assert(!phys.toLowerCase.contains("rangepartitioning"),
+          s"$method planned a global sort:\n$phys")
+      }
+    } finally {
+      spark.conf.set("graft.vector_index_method", "")
+      graft.index.VectorIndexes.drop("sji")
+      graft.index.VectorIndexes.drop("sjh")
+    }
+  }
 }

@@ -9,7 +9,8 @@ import graft.index.VectorIndexes
 /** The KNN optimizer rule (reference OptimizeAsVectorIndexScan,
   * vector_index_scan.cpp:29-149): ORDER BY dist LIMIT k over an indexed
   * table is silently served through the index. */
-class RewriteSpec extends SparkSpecBase {
+class RewriteSpec extends SparkSpecBase
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private lazy val emb = Tables.load(spark, sfDir, "embeddings")
   private lazy val query: Seq[Double] =
@@ -91,5 +92,29 @@ class RewriteSpec extends SparkSpecBase {
         .limit(5).queryExecution.optimizedPlan.toString
       assert(!planStr.contains("__graft_knn_id"))
     } finally VectorIndexes.drop("rw_ivf3")
+  }
+
+  test("the semi-join sits above the pruning Project: no unread columns") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    VectorIndexes.enableRewrite(spark)
+    VectorIndexes.createIvfFlat("rw_ivf5", "embeddings", emb,
+      "vec_id", "embedding", lists = 8, probeLists = 8)
+    try {
+      val df = emb.select("vec_id", "embedding")
+        .orderBy(l2Dist(col("embedding"), vecLit(query)).asc).limit(5)
+      assert(df.queryExecution.optimizedPlan.toString
+        .contains("__graft_knn_id"), "not index-served")
+      assert(df.collect().length == 5)
+      val semi = collectFirst(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec if j.joinType == LeftSemi => j }
+      assert(semi.isDefined, "no semi-join in the physical plan")
+      val scans = collect(semi.get.left) { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty)
+      scans.foreach(s => assert(
+        s.requiredSchema.fieldNames.toSeq == Seq("vec_id", "embedding"),
+        s"ReadSchema ${s.requiredSchema.simpleString}"))
+    } finally VectorIndexes.drop("rw_ivf5")
   }
 }
